@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.QualityPipeline.{defaultConfig, Config}
 
 /** Dev tool: per-battery pipeline cost — default config, each opt-in
@@ -10,19 +9,10 @@ import graft.pipeline.QualityPipeline.{defaultConfig, Config}
   */
 object BatteryBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val n = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "100000").toLong
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", (32 * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus, "graft-battery-bench")
     val full = Bench.fullBatteryConfig
     val variants: Seq[(String, Config)] = Seq(
       "default" -> defaultConfig,

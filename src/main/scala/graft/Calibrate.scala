@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: per-error-class feature distributions + rule hit matrix on
@@ -10,12 +9,7 @@ import org.apache.spark.sql.functions._
 object Calibrate {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 3000L
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(8, "graft-calibrate")
 
     val cls = udf((url: String) =>
       graft.sources.PagesGen.errorClass(url.split("/p/")(1).toLong))

@@ -23,17 +23,7 @@ object CheckpointBench {
     val n = if (args.length > 1) args(1).toLong else 4000000L
     val cpus = if (args.length > 2) args(2).toInt else 32
     val days = if (args.length > 3) args(3).toInt else 4
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-ckpt-bench-$conc")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.files.maxPartitionBytes", (32 * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus, s"graft-ckpt-bench-$conc")
     try {
       val (pages, release) = Bench.pipelineInput(spark, n)
       val epoch = java.sql.Date.valueOf("2024-01-01")

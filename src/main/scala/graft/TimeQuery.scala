@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time named SparkEntry queries in isolation (median of reps)
   * without paying for the whole Bench board.
   *
@@ -13,18 +11,10 @@ import org.apache.spark.sql.SparkSession
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", (32 * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus, "graft-timequery")
     // session warmup so the first named query doesn't absorb one-time cost
     try SparkEntry.queries("q1_agg")(spark, sfDir)
       .write.mode("overwrite").format("noop").save()

@@ -29,8 +29,11 @@ import org.apache.spark.sql.types.DoubleType
 object Ann {
 
   /** Cosine similarity of two array<float/double> columns (double math).
-    * Bit-identical to [[cosineComposed]] on every input (same per-index
-    * fold order, same null semantics) — AnnSpec's differential pins it.
+    * Bit-identical to [[cosineComposed]] on every non-degenerate input
+    * (same per-index fold order, same null semantics) — AnnSpec's
+    * differential pins it. Zero-norm and empty inputs (0/0) yield NaN, as
+    * DuckDB's list_cosine_similarity does, where the composed form yields
+    * NULL or, under ANSI mode, a divide-by-zero error.
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.GraftExpr.column(CosineSimExpr(
@@ -519,6 +522,7 @@ case class NormSqExpr(
   import org.apache.spark.sql.types._
   import org.apache.spark.sql.catalyst.util.ArrayData
   import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
@@ -526,6 +530,14 @@ case class NormSqExpr(
   @transient private lazy val elemIsFloat = child.dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
+  }
+
+  // the kernel reads elements as float or double by width; any other
+  // element type would be read at the wrong width
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"norm_sq needs an array<float|double> input, got ${t.catalogString}")
   }
 
   override def nullSafeEval(input: Any): Any =

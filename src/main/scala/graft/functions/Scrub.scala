@@ -12,11 +12,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *  1. [[Scrub.scrubCol]] — a chain of built-in `RegExpReplace` nodes.
   *     Fully codegen'd, and each pattern is SQL-portable (the DuckDB
-  *     oracle applies the same chain), so this is the correctness path.
+  *     oracle applies the same chain), so this is the oracle-portable
+  *     reference the fused path is tested against.
   *  2. [[ScrubText]] — one fused custom Expression that pre-compiles all
   *     patterns once per task and applies them in a single pass, skipping
   *     untouched strings without reallocation. Same output byte-for-byte
-  *     (property-tested); used when profiling shows the replace chain hot.
+  *     (property-tested). The pipeline's kept writer always uses it.
   *
   * Semantics descend from the reference's typo *correction*
   * (`/root/reference/src/function_typo.py:6-47`): replace a flagged span

@@ -1,13 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DoubleType
 import graft.functions._
 import graft.rules.Rules
-import graft.model.ColumnProfile
-import graft.profile.Profiler
 
 /** The webtext keep/drop + scrub engine (north rule).
   *
@@ -150,31 +147,9 @@ object QualityPipeline {
 
   val defaultConfig: Config = Config()
 
-  // env-gated phase timer (SPARK_GRAFT_PHASES=1): localizes driver-side
-  // wall between actions — stage metrics alone can't show scheduling /
-  // analysis / collect gaps
-  private val PhaseLog = sys.env.contains("SPARK_GRAFT_PHASES")
-  @inline private def ph[T](name: String)(f: => T): T =
-    if (!PhaseLog) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(
-        f"[phase] $name%-26s ${(System.nanoTime() - t0) / 1e9}%7.2fs")
-      r
-    }
-
   // ---------------------------------------------------------------------
   // Stage 1: fused per-document features — one narrow pass over `text`.
   // ---------------------------------------------------------------------
-  /** All per-doc features come from ONE fused expression
-    * ([[graft.functions.DocStats]]) — a single tight JVM pass per
-    * document (~100 µs/doc single-thread on ~1.4 KB docs, byte path +
-    * one-probe score table). The composed Column/higher-order-function
-    * version measured ~16 ms/doc (HOF lambdas are interpreted per
-    * element, and any Column subtree referenced inside a lambda
-    * re-evaluates per element — see DocStats scaladoc). TextFns remains
-    * the semantic reference; DocStatsSpec cross-validates the two paths.
-    */
   /** text column swap for `cfg.extractHtml`: derive text from the html
     * payload (before any html drop). Applied independently by features()
     * and run()'s kept writer — each extracts from the SOURCE bytes, so
@@ -185,6 +160,15 @@ object QualityPipeline {
     else pages.withColumn("text",
       graft.functions.HtmlExtract.extractBinary(col("html")))
 
+  /** All per-doc features come from ONE fused expression
+    * ([[graft.functions.DocStats]]) — a single tight JVM pass per
+    * document (~100 µs/doc single-thread on ~1.4 KB docs, byte path +
+    * one-probe score table). The composed Column/higher-order-function
+    * version measured ~16 ms/doc (HOF lambdas are interpreted per
+    * element, and any Column subtree referenced inside a lambda
+    * re-evaluates per element — see DocStats scaladoc). TextFns remains
+    * the semantic reference; DocStatsSpec cross-validates the two paths.
+    */
   def features(pages0: DataFrame, cfg: Config = defaultConfig): DataFrame = {
     val pages = withSourceText(pages0, cfg)
     // Gopher repetition battery rides the same feature scan as an extra
@@ -415,7 +399,7 @@ object QualityPipeline {
       .filter(col("uid") =!= col("hub"))
       .select(col("hub").as("uid1"), col("uid").as("uid2"))
       .dropDuplicates("uid1", "uid2")
-    val pairs = ph("neardup pairs checkpoint")(pairs0.localCheckpoint(true))
+    val pairs = pairs0.localCheckpoint(true)
     NearDupCandidates(eligible, sigs, pairs)
   }
 
@@ -439,7 +423,7 @@ object QualityPipeline {
     // proves overflow (distributed path) — a separate count() was a
     // driver round-trip spent learning what the fetch shows anyway
     val fetchCap = (cfg.maxDriverEdges + 1).min(Int.MaxValue.toLong).toInt
-    val fetched = ph("neardup pair fetch")(pairs.limit(fetchCap).collect())
+    val fetched = pairs.limit(fetchCap).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     // driver-heap gate is on MEMBER count, not just edge count: the fetch
     // below pulls (url, signature) per distinct member, so a sparse pair
@@ -471,10 +455,9 @@ object QualityPipeline {
     // Seq[java.lang.Long] form retained ~3× the heap per member, which is
     // what bounds this path's driver footprint at the crossover
     val NullSig = -1L
-    val members = ph("neardup member fetch")(
-      eligible.select(col("uid"), col("url"), col("minhash_sig"))
-        .join(broadcast(uidDf), Seq("uid"))
-        .collect())
+    val members = eligible.select(col("uid"), col("url"), col("minhash_sig"))
+      .join(broadcast(uidDf), Seq("uid"))
+      .collect()
       .map { r =>
         val boxed = r.getSeq[java.lang.Long](2)
         val sig = new Array[Long](cfg.minHashK)
@@ -625,11 +608,6 @@ object QualityPipeline {
     labels
   }
 
-  /** Driver-side union-find over a SMALL verified edge set (counted ≤
-    * cfg.maxDriverEdges). Path-halving union-find is O(α·E); the result
-    * labels table is parallelized back out. Exactly equivalent to
-    * [[connectedMin]] on any diameter (no LabelRounds truncation).
-    */
   /** Path-halving union-find over local edges; the returned function maps
     * a node to its component's min node.
     */
@@ -652,6 +630,11 @@ object QualityPipeline {
     find
   }
 
+  /** Driver-side union-find over a SMALL verified edge set (counted ≤
+    * cfg.maxDriverEdges). Path-halving union-find is O(α·E); the result
+    * labels table is parallelized back out. Exactly equivalent to
+    * [[connectedMin]] on any diameter (no LabelRounds truncation).
+    */
   private[graft] def connectedMinDriver(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
@@ -682,12 +665,6 @@ object QualityPipeline {
       case 128 => Rules.simHashNearDupWide(feat, col("url"),
         col("simhash_hi"), col("simhash_lo"), maxHamming = 6)
     }
-
-  def pass1(feat: DataFrame, cfg: Config = defaultConfig): DataFrame =
-    simHashVerdicts(feat, cfg).foldLeft(
-      heuristicVerdicts(feat, cfg)
-        .unionByName(exactDupVerdicts(feat, cfg))
-        .unionByName(nearDupVerdicts(feat, cfg)))(_ unionByName _)
 
   // ---------------------------------------------------------------------
   // Pass 2 — corpus-stat rules over pass-1 survivors
@@ -788,12 +765,12 @@ object QualityPipeline {
     def unpersist(): Unit = bag.release()
   }
 
-  /** Full run: features → pass1 → survivors → pass2 → kept + scrub.
-    * `fusedScrub=true` uses the single-pass ScrubText expression; both
-    * paths produce byte-identical output (property-tested).
+  /** Full run: features → pass 1 → survivors → pass 2 → kept + scrub.
+    * The kept writer scrubs with the single-pass ScrubText expression
+    * ([[Scrub.scrubFused]]), byte-identical to the [[Scrub.scrubCol]]
+    * chain (property-tested).
     */
-  def run(pages: DataFrame, cfg: Config = defaultConfig,
-          fusedScrub: Boolean = true): Result = {
+  def run(pages: DataFrame, cfg: Config = defaultConfig): Result = {
     val bag = new CacheBag
     val feat = bag.track(features(pages, cfg).cache())
     // CACHE BUILD IS FOLDED INTO THE FIRST REAL JOB: the near-dup
@@ -805,7 +782,7 @@ object QualityPipeline {
     // warm scan + an action round-trip of pure coordination on the
     // serial critical path) is gone. All LATER feat consumers still run
     // strictly after this job, so they read a warm cache.
-    val cand = ph("neardup candidates")(nearDupCandidates(feat, cfg))
+    val cand = nearDupCandidates(feat, cfg)
     // VERDICT SETS ARE LEAVES, NOT CACHES. unionByName flattens unions
     // eagerly, so a downstream plan never contains the v1/v2 union node
     // and a cache() on either can never be matched (measured: every
@@ -875,24 +852,22 @@ object QualityPipeline {
          cfg.urlBlockedHosts, cfg.urlAdultKeywords, cfg.maxUrlLen))) ++
       (if (cfg.hostDocCap <= 0) Nil
        else Seq(Rules.hostCap(pages, col("url"), col("url"), cfg.hostDocCap)))
-    val v1aF = Future(ph("v1a checkpoint")(
+    val v1aF = Future(
       (simHashVerdicts(feat, cfg).toSeq ++ boilerV.toSeq ++ decontamV.toSeq ++ substrV().toSeq ++ modelV.toSeq ++ urlV).foldLeft(
           heuristicVerdicts(feat, cfg).unionByName(exactDupVerdicts(feat, cfg)))(
           _ unionByName _)
-        .coalesce(par).localCheckpoint(true)))
-    val nd = ph("neardup resolve")(nearDupResolve(cand, cfg))
+        .coalesce(par).localCheckpoint(true))
+    val nd = nearDupResolve(cand, cfg)
     // both sides are materialised leaves (v1a a checkpoint block, nd a
     // local relation or checkpointed join-back), so the union needs no
     // further checkpoint
     val v1 = Await.result(v1aF, Duration.Inf).unionByName(nd)
     val dropped1 = v1.select("url").distinct()
     val survivors = feat.join(dropped1, Seq("url"), "left_anti")
-    val (v2raw, statCols) = ph("pass2 stats agg")(pass2Impl(survivors, cfg))
+    val (v2raw, statCols) = pass2Impl(survivors, cfg)
     bag.track(statCols)
-    val v2 = ph("v2 checkpoint")(v2raw.coalesce(par).localCheckpoint(true))
+    val v2 = v2raw.coalesce(par).localCheckpoint(true)
     val verdicts = v1.unionByName(v2)
-    val scrub: Column => Column =
-      if (fusedScrub) Scrub.scrubFused else Scrub.scrubCol
     // kept output: RE-SCAN the source pages (anti-join the tiny dropped
     // url set — both verdict sides are checkpoint leaves, AQE broadcasts
     // them) and recompute the three output features with the LITE kernel
@@ -911,7 +886,7 @@ object QualityPipeline {
         col("__ds.lang").as("lang_detected"),
         col("__ds.perplexity").as("perplexity"),
         col("__ds.n_words").as("n_words"),
-        scrub(col("text")).as("scrubbed_text"))
+        Scrub.scrubFused(col("text")).as("scrubbed_text"))
     val metrics = verdicts.rollup(col("rule")).count()
       .withColumn("rule", coalesce(col("rule"), lit("__total__")))
     Result(verdicts, kept, metrics, bag)

@@ -81,6 +81,13 @@ class AnnSpec extends AnyFunSuite {
     }
   }
 
+  test("normSq over array<int> fails analysis with a type mismatch") {
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Seq(Seq(1, 2, 3)).toDF("a").select(Ann.normSq(col("a"))))
+    assert(e.getMessage.contains("DATATYPE_MISMATCH") &&
+      e.getMessage.contains("array<int>"), e.getMessage)
+  }
+
   test("bruteForceTopK: exact neighbors, deterministic tie-break") {
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val corpus = e.select(col("vec_id").as("id"), col("embedding").as("vec")).cache()
